@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 _IRI_BAD_RX = re.compile(r'[\x00-\x20<>"{}|^`\\]')
 
 from blazegraph_database_spark.model.store import TRIPLE_COLS, TripleStore
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.update.update import UpdatableStore
 
 VERTEX_TYPE = "pg:Vertex"
@@ -161,7 +162,7 @@ class PropertyGraph:
     def _insert(self, rows: list[tuple]) -> None:
         before = len(self.store.versions) - 1
         self.store.insert_data(
-            self.spark.createDataFrame(rows, ", ".join(f"{c} string" for c in TRIPLE_COLS))
+            local_df(self.spark, rows, ", ".join(f"{c} string" for c in TRIPLE_COLS))
         )
         self._notify(before)
 
@@ -345,8 +346,8 @@ class PropertyGraphBulkLoad:
         parts = list(self._dfs)
         if self._rows:
             parts.append(
-                self.graph.spark.createDataFrame(
-                    self._rows, ", ".join(f"{c} string" for c in TRIPLE_COLS)
+                local_df(
+                    self.graph.spark, self._rows, ", ".join(f"{c} string" for c in TRIPLE_COLS)
                 )
             )
         if not parts:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.update.update import UpdatableStore
 
 # value tuple = (lex, dt) matching the store's (o_lex, o_dt) columns
@@ -264,9 +265,9 @@ class ObjectManager:
         schema = "s string, p string, o_lex string, o_dt string"
         with self.store.transaction():
             if self._removed:
-                self.store.delete_data(spark.createDataFrame(self._removed, schema))
+                self.store.delete_data(local_df(spark, self._removed, schema))
             if self._added:
-                self.store.insert_data(spark.createDataFrame(self._added, schema))
+                self.store.insert_data(local_df(spark, self._added, schema))
         self._added, self._removed, self._dirty = [], [], set()
 
     def abort(self) -> None:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
+from blazegraph_database_spark.session import local_df
 
 RDF_TYPE = "rdf:type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
@@ -74,17 +75,6 @@ def _arrow_head(df: DataFrame, n: int) -> list[tuple]:
     return list(pdf.itertuples(index=False, name=None))
 
 
-def _arrow_pairs_df(spark, rows: list[tuple], schema) -> DataFrame:
-    """Re-parallelize a driver-computed pair list through Arrow. The
-    closure tier can emit up to SMALL_CLOSURE_MAX_PAIRS rows; pickling
-    those back one tuple at a time cost ~1 s per 200k pairs where the
-    Arrow batch path is tens of milliseconds."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
-
-
 def _closure_local(rows: list) -> list[tuple] | None:
     """In-memory closure of collected (src, dst) edges; None if the pair set
     blows past SMALL_CLOSURE_MAX_PAIRS (caller falls back to distributed)."""
@@ -130,7 +120,8 @@ def transitive_closure(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFram
             if not pdf.isnull().values.any():
                 fn_pdf = _functional_closure_driver(pdf)
                 if fn_pdf is not None:
-                    return edges.sparkSession.createDataFrame(
+                    return local_df(
+                        edges.sparkSession,
                         fn_pdf.rename(columns={"s": "src", "o": "dst"}),
                         all_e.schema,
                     )
@@ -138,7 +129,7 @@ def transitive_closure(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFram
         if closed is not None:
             if not closed:
                 return all_e  # no edges → empty closure, keep schema
-            return _arrow_pairs_df(edges.sparkSession, closed, all_e.schema)
+            return local_df(edges.sparkSession, closed, all_e.schema)
     for _ in range(max_iters):
         grown = (
             all_e.alias("a")
@@ -883,7 +874,7 @@ def same_as_components(df: DataFrame) -> DataFrame:
         ]
         rows = sorted(set(rows))
         spark = df.sparkSession
-        return spark.createDataFrame(rows or [], "node string, canon string")
+        return local_df(spark, rows, "node string, canon string")
     return gas.connected_components(edges).select(F.col("node"), F.col("comp").alias("canon"))
 
 

@@ -169,7 +169,8 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = LSH_BANDS, max_bucket: int
             )
         ).alias("p")
     ).select("p.a", "p.b")
-    return pairs.distinct()
+    # an id repeated in one bucket would pair with itself
+    return pairs.filter(F.col("a") < F.col("b")).distinct()
 
 
 def verify_pairs_jaccard(pairs: DataFrame, sets_df: DataFrame) -> DataFrame:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 # Lucene's classic English stop set (StopAnalyzer.ENGLISH_STOP_WORDS_SET) —
@@ -279,7 +281,7 @@ def search(
     # index terms are lowercased at build time — lowercase the query tokens
     # too so the search is case-insensitive like the reference's analyzer
     patterns = [(t.lower(), p) for t, p in patterns]
-    pats = spark.createDataFrame(patterns, "pat string, is_prefix boolean")
+    pats = local_df(spark, patterns, "pat string, is_prefix boolean")
     # stats-bearing index (df/n/dmag stored at build — the reference's
     # FullTextIndex shape): relevance reads them off the matched postings.
     # Foreign index frames without the stats columns keep the compute-at-

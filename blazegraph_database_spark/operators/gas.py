@@ -25,6 +25,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
+
+
 MAX_ITERS = 64
 
 # Edge sets at most this size run the whole traversal on the driver in one
@@ -78,16 +81,6 @@ def _driver_edges(e: DataFrame):
     return pdf
 
 
-def _rows_df(spark, rows: list[tuple], schema) -> DataFrame:
-    """Re-parallelize driver-computed rows through one Arrow batch (the
-    inverse transfer; pickling tuples one by one costs ~1 s per 200k rows)."""
-    import pandas as pd
-
-    names = [f.name for f in schema.fields] if hasattr(schema, "fields") else None
-    pdf = pd.DataFrame(rows, columns=names)
-    return spark.createDataFrame(pdf, schema)
-
-
 def _bfs_driver(e: DataFrame, sources: list[str], max_depth: int) -> DataFrame | None:
     """Driver-tier BFS: same level-by-level expansion as _general_bfs (pred =
     min src among the frontier parents that discover a node), one job to
@@ -117,7 +110,7 @@ def _bfs_driver(e: DataFrame, sources: list[str], max_depth: int) -> DataFrame |
             reached.append((v, dcur, p))
         frontier = list(nxt)
     rows = [(s, 0, None) for s in sources] + reached
-    return _rows_df(e.sparkSession, rows, "node string, depth int, pred string")
+    return local_df(e.sparkSession, rows, "node string, depth int, pred string")
 
 
 def _sssp_driver(e: DataFrame, sources: list[str], max_iters: int) -> DataFrame | None:
@@ -146,7 +139,7 @@ def _sssp_driver(e: DataFrame, sources: list[str], max_iters: int) -> DataFrame 
             break
         dist.update(improved)
         frontier = [v for v, _ in improved]
-    return _rows_df(e.sparkSession, list(dist.items()), "node string, dist double")
+    return local_df(e.sparkSession, list(dist.items()), "node string, dist double")
 
 
 def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | None:
@@ -167,7 +160,7 @@ def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | No
     uniq = pd.unique(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
     n = len(uniq)
     if n == 0:
-        return _rows_df(e.sparkSession, [], "node string, rank double")
+        return local_df(e.sparkSession, [], "node string, rank double")
     pos = pd.Series(np.arange(n), index=uniq)
     s = pos[pdf["src"]].values
     d = pos[pdf["dst"]].values
@@ -187,7 +180,7 @@ def _pagerank_driver(e: DataFrame, damping: float, iters: int) -> DataFrame | No
         .withColumn("rank", F.lit(0.0))
         .schema
     )
-    return e.sparkSession.createDataFrame(out, schema)
+    return local_df(e.sparkSession, out, schema)
 
 
 def _bfs_from_df_driver(e: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame | None:
@@ -215,7 +208,7 @@ def _bfs_from_df_driver(e: DataFrame, seeds: DataFrame, max_depth: int) -> DataF
                     depth[v] = dcur
                     nxt.append(v)
         frontier = nxt
-    return _rows_df(e.sparkSession, list(depth.items()), "node string, depth int")
+    return local_df(e.sparkSession, list(depth.items()), "node string, depth int")
 
 
 def _paths_driver(
@@ -244,7 +237,7 @@ def _paths_driver(
         active = [(head, nodes) for head, nodes in grown if head != target]
         if not active:
             break
-    return _rows_df(e.sparkSession, found, "path string, hops int")
+    return local_df(e.sparkSession, found, "path string, hops int")
 
 
 def _cc_driver(e: DataFrame) -> DataFrame | None:
@@ -279,7 +272,7 @@ def _cc_driver(e: DataFrame) -> DataFrame | None:
     nodes = set(srcs)
     nodes.update(dsts)
     schema = e.select(F.col("src").alias("node"), F.col("src").alias("comp")).schema
-    return _rows_df(e.sparkSession, [(x, find(x)) for x in nodes], schema)
+    return local_df(e.sparkSession, [(x, find(x)) for x in nodes], schema)
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -357,9 +350,7 @@ def _functional_bfs(e: DataFrame, sources: list[str], max_depth: int) -> DataFra
         ptr = ptr2.select("node", "pred", "anc", "d")
         if ptr2.filter("jumped").isEmpty():
             break
-    seed = spark.createDataFrame(
-        [(s, 0, None) for s in sources], "node string, depth int, pred string"
-    )
+    seed = local_df(spark, [(s, 0, None) for s in sources], "node string, depth int, pred string")
     reached = (
         ptr.filter(F.col("anc").isin(sources) & (F.col("d") <= max_depth))
         .join(seed.select("node"), on="node", how="left_anti")  # sources stay depth 0
@@ -407,7 +398,7 @@ def bfs(
 
 def _general_bfs(spark, e: DataFrame, sources: list[str], max_depth: int) -> DataFrame:
     seed = _chk(
-        spark.createDataFrame([(s, 0, None) for s in sources], "node string, depth int, pred string")
+        local_df(spark, [(s, 0, None) for s in sources], "node string, depth int, pred string")
     )
     parts = [seed]
     visited = seed.select("node")
@@ -468,7 +459,7 @@ def _functional_sssp(e: DataFrame, sources: list[str], max_iters: int) -> DataFr
         ptr = ptr2.select("node", "anc", "d", "h")
         if ptr2.filter("jumped").isEmpty():
             break
-    seed = spark.createDataFrame([(s, 0.0) for s in sources], "node string, dist double")
+    seed = local_df(spark, [(s, 0.0) for s in sources], "node string, dist double")
     reached = (
         ptr.filter(F.col("anc").isin(sources) & (F.col("h") <= max_iters))
         .join(seed.select("node"), on="node", how="left_anti")
@@ -508,7 +499,7 @@ def sssp(
 
 
 def _general_sssp(spark, e: DataFrame, sources: list[str], max_iters: int) -> DataFrame:
-    state = _chk(spark.createDataFrame([(s, 0.0) for s in sources], "node string, dist double"))
+    state = _chk(local_df(spark, [(s, 0.0) for s in sources], "node string, dist double"))
     frontier = state
     for _ in range(max_iters):
         msgs = (
@@ -787,9 +778,9 @@ def paths(edges: DataFrame, source: str, target: str, max_length: int = 8) -> Da
         if out is not None:
             return out
     active = _chk(
-        spark.createDataFrame([(source, [source])], "head string, nodes array<string>")
+        local_df(spark, [(source, [source])], "head string, nodes array<string>")
     )
-    found = spark.createDataFrame([], "path string, hops int")
+    found = local_df(spark, [], "path string, hops int")
     for depth in range(1, max_length + 1):
         grown = (
             active.join(e, active["head"] == e.src)
@@ -893,7 +884,7 @@ def fuzzy_sssp(
             cur = nxt
     if not path_parts:
         spark = edges.sparkSession
-        return spark.createDataFrame([], "node string, dist int"), st_dists
+        return local_df(spark, [], "node string, dist int"), st_dists
     path_set = path_parts[0]
     for p in path_parts[1:]:
         path_set = path_set.unionByName(p)

@@ -25,6 +25,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
+
 EARTH_RADIUS_KM = 6371.0
 
 
@@ -485,7 +487,7 @@ def knn(
     if need > width:
         rows = band_top(need).collect()
     spark = df.sparkSession
-    return spark.createDataFrame(rows, f"{id_col} long, distance_km double")
+    return local_df(spark, rows, f"{id_col} long, distance_km double")
 
 
 # --------------------------------------------------------------------------

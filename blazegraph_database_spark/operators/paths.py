@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.plans import algebra as A
+from blazegraph_database_spark.session import local_df
 
 MAX_ITERS = 64  # diameter guard; 100 TB graphs rarely exceed ~30 rounds
 
@@ -227,19 +228,16 @@ def transitive_closure(
                 # (the dominant hierarchy shape; ~5x over the python DFS)
                 closed_pdf = _functional_closure_driver(pdf)
                 if closed_pdf is not None:
-                    return pairs.sparkSession.createDataFrame(closed_pdf, known.schema)
+                    return local_df(pairs.sparkSession, closed_pdf, known.schema)
             if n_pairs <= 20_000:
                 # small cyclic / non-functional graphs: python DFS closure
-                from blazegraph_database_spark.inference.rdfs import (
-                    _arrow_pairs_df,
-                    _closure_local,
-                )
+                from blazegraph_database_spark.inference.rdfs import _closure_local
 
                 closed = _closure_local(list(pdf.itertuples(index=False, name=None)))
                 if closed is not None:
                     if not closed:
                         return known
-                    return _arrow_pairs_df(pairs.sparkSession, closed, known.schema)
+                    return local_df(pairs.sparkSession, closed, known.schema)
     # Functional bases (parent-pointer shape — the dominant hierarchy/chain
     # case) close in ceil(log2 d) array-doubling rounds instead of d
     # semi-naive rounds or |closure|-self-joining doubling; inverse-

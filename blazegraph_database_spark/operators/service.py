@@ -28,6 +28,9 @@ from urllib.parse import urlencode
 
 from pyspark.sql import DataFrame, SparkSession
 
+from blazegraph_database_spark.session import local_df
+
+
 ServiceFn = Callable[[SparkSession, dict], DataFrame]
 
 _REGISTRY: dict[str, ServiceFn] = {}
@@ -733,16 +736,14 @@ def remote_sparql_service(endpoint: str, transport: Transport | None = None) -> 
                 block = _serialize_values(cols, pushed[i : i + chunk])
                 all_rows.extend(transport(endpoint, query.replace("{values}", block)))
         if not all_rows:
-            return spark.createDataFrame([], "s string")
+            return local_df(spark, [], "s string")
         out_cols: list[str] = []
         for r in all_rows:  # first-seen order: keeps the remote SELECT order
             for k in r:
                 if k not in out_cols:
                     out_cols.append(k)
         data = [tuple(r.get(c) for c in out_cols) for r in all_rows]
-        return spark.createDataFrame(
-            data, ", ".join(f"{c} string" for c in out_cols)
-        )
+        return local_df(spark, data, ", ".join(f"{c} string" for c in out_cols))
 
     return call
 
@@ -816,19 +817,23 @@ def bd_sample_service(store, sps) -> DataFrame:
     if stype == "DENSE":
         return df.orderBy(*cols).limit(limit)
     if stype == "EVEN":
-        # every (total/N)-th tuple in key order. Indices come from
-        # zipWithIndex over the distributed sort — NOT a global
-        # row_number window, which would funnel every row through one
-        # task (WindowExec with an empty partition spec)
+        # every (total/N)-th tuple in key order. Indices come from the
+        # JVM's distributed sequence (zipWithIndex) over the sort — NOT a
+        # global row_number window, which would funnel every row through
+        # one task (WindowExec with an empty partition spec), and no
+        # python-side RDD
+        from pyspark.sql.internal import InternalFunction
+
         total = df.count()
         step = max(total // max(limit, 1), 1)
-        sdf = df.orderBy(*cols)
-        picked = (
-            sdf.rdd.zipWithIndex()
-            .filter(lambda t: t[1] % step == 0)
-            .map(lambda t: t[0])
+        idx = InternalFunction.distributed_sequence_id().alias("__i")
+        return (
+            df.orderBy(*cols)
+            .select(idx, *df.columns)
+            .filter(F.col("__i") % step == 0)
+            .drop("__i")
+            .limit(limit)
         )
-        return sdf.sparkSession.createDataFrame(picked, sdf.schema).limit(limit)
     if stype == "RANDOM":
         return df.orderBy(F.rand(seed)).limit(limit)
     raise ValueError(f"unknown bd:sample.sampleType {stype!r} (DENSE/EVEN/RANDOM)")
@@ -977,7 +982,7 @@ def bd_values_service(store, sps) -> DataFrame:
             raise ValueError(f"unknown bd:values param {key!r}")
     if var is None:
         raise ValueError("bd:values needs bd:values.var ?v")
-    return store.spark.createDataFrame([(v,) for v in vals], f"{var} string")
+    return local_df(store.spark, [(v,) for v in vals], f"{var} string")
 
 
 def bd_history_service(store, sps) -> DataFrame:
@@ -1174,7 +1179,7 @@ def fts_search_service(store, sps, transport=None) -> DataFrame:
             )
         )
     spark = store.spark
-    out = spark.createDataFrame(rows, "res string, score double, snippet string")
+    out = local_df(spark, rows, "res string, score double, snippet string")
     sel = [out["res"].alias(res_var.name)]
     rtype = opts["searchResultType"].upper()
     if rtype not in ("URI", "LITERAL"):
@@ -1297,7 +1302,7 @@ def alp_service(store, pattern) -> DataFrame:
             F.col("o").alias("s"), F.col("s").alias("o")
         )
         seed = const_lex(path_sp.s if forward else path_sp.o)
-        frontier = store.spark.createDataFrame([(seed,)], "o string")
+        frontier = local_df(store.spark, [(seed,)], "o string")
         reached = bounded_reach(base, frontier, max(lower, 1), upper)
         pairs = reached.select(F.lit(seed).alias("s"), F.col("o"))
         if not forward:

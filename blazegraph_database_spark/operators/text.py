@@ -18,6 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
+
 # Materializing the per-doc frequency table at the LM/classifier fan-out
 # trades one checkpoint write+read cycle for the re-tokenize scans the extra
 # consumers would otherwise run. The trade is corpus-sized: at the ~7 MB
@@ -1252,8 +1254,8 @@ def interleave_sources(
         )
     srcs = sorted(srcs)
     n = len(srcs)
-    catalog = df.sparkSession.createDataFrame(
-        [(s, i) for i, s in enumerate(srcs)], f"{source_col} string, __sidx int"
+    catalog = local_df(
+        df.sparkSession, [(s, i) for i, s in enumerate(srcs)], f"{source_col} string, __sidx int"
     )
     key = F.conv(
         F.substring(

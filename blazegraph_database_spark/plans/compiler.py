@@ -18,6 +18,7 @@ predicates (region/nation) out of shuffles.
 from __future__ import annotations
 
 import re
+import weakref
 from collections import Counter
 from functools import singledispatch
 
@@ -28,6 +29,7 @@ from pyspark.errors import AnalysisException
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.model.terms import Lit, Var, const_lex, is_const
 from blazegraph_database_spark.plans import algebra as A
+from blazegraph_database_spark.session import local_df
 
 BROADCAST_MAX_ROWS = 3_000_000  # est rows under which a pattern side is broadcast
 
@@ -114,7 +116,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
             total = sum(st0[a].count for a in _pred_aliases(p) if a in st0)
         else:  # variable predicate: sum of all range counts
             total = sum(s.count for s in store.stats().values())
-        return store.spark.createDataFrame([(int(total),)], f"{alias} long")
+        return local_df(store.spark, [(int(total),)], f"{alias} long")
 
     # SELECT (COUNT(*) AS ?c) { spo } — parser shape:
     # Project(Extend(Group(bgp, (), ((__agg0, count(1)),)), c, col(__agg0)), [c])
@@ -155,9 +157,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
         m = _fast_spo(node.child.child)
         if m and isinstance(m[1], Var) and m[1].name == node.child.vars[0]:
             preds = sorted(p for p, s in store.stats().items() if s.count > 0)
-            return store.spark.createDataFrame(
-                [(p,) for p in preds], f"{m[1].name} string"
-            )
+            return local_df(store.spark, [(p,) for p in preds], f"{m[1].name} string")
 
     # SELECT ?p (COUNT(*) AS ?c) { ?s ?p ?o } GROUP BY ?p —
     # Project(Extend(Group(bgp, (p,), ((__agg0, count(1)),)), c, col(__agg0)), [p, c]).
@@ -187,7 +187,7 @@ def _fast_scan_rewrite(store: TripleStore, node):
                     data, schema = rows, f"{pkey} string, {ch.var} long"
                 else:
                     data, schema = [(c, p) for p, c in rows], f"{ch.var} long, {pkey} string"
-                return store.spark.createDataFrame(data, schema)
+                return local_df(store.spark, data, schema)
     return None
 
 
@@ -664,22 +664,18 @@ def _emb_pattern_df(sp: A.SP, store: TripleStore) -> DataFrame:
 # triple pattern per query — plan-BUILD time is part of query cost in this
 # engine (docs/scale_notes.md "Plan-build discipline"). Columns are
 # immutable expression trees, safe to reuse across DataFrames; built
-# lazily because the gateway may not exist at import time.
-_CCACHE: dict = {}
+# lazily because the gateway may not exist at import time. One cache per
+# SparkContext object: cached Columns hold py4j refs into that context's
+# gateway, and a JVM restart in the same process must not see them (ADVICE
+# r11). Weak keys, not id(): CPython reuses a dead context's id for a new
+# one. The lookup is pure-python, no roundtrip.
+_CCACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _ccache() -> dict:
-    """The Column cache, invalidated when the active SparkContext changes:
-    cached Columns hold py4j refs into a specific gateway, and a JVM
-    restart in the same process would leave them pointing at a dead one
-    (ADVICE r11). The identity check is pure-python, no roundtrip."""
     from pyspark import SparkContext
 
-    tag = id(SparkContext._active_spark_context)
-    if _CCACHE.get("__ctx") != tag:
-        _CCACHE.clear()
-        _CCACHE["__ctx"] = tag
-    return _CCACHE
+    return _CCACHE.setdefault(SparkContext._active_spark_context, {})
 
 
 def _cc(name: str) -> Column:
@@ -2151,7 +2147,7 @@ def _(node: A.Values, store: TripleStore) -> DataFrame:
             return ldf
     if node.child is None:
         data = [tuple(row.get(c) for c in cols) for row in node.rows]
-        return spark.createDataFrame(data, schema=", ".join(f"{c} string" for c in cols))
+        return local_df(spark, data, schema=", ".join(f"{c} string" for c in cols))
     child = _compile(node.child, store)
     groups: dict[tuple, list] = defaultdict(list)
     for row in node.rows:
@@ -2166,7 +2162,7 @@ def _(node: A.Values, store: TripleStore) -> DataFrame:
             outs.extend([child] * len(rows_))
             continue
         data = [tuple(r.get(c) for c in keep) for r in rows_]
-        vdf = spark.createDataFrame(data, schema=", ".join(f"{c} string" for c in keep))
+        vdf = local_df(spark, data, schema=", ".join(f"{c} string" for c in keep))
         join_cols = sorted(set(child.columns) & set(bound))
         if join_cols:
             # SPARQL solution compatibility: a child row whose shared var is
@@ -3260,9 +3256,7 @@ def _(node: A.PathPattern, store: TripleStore) -> DataFrame:
         ]
         if consts:
             spark = store.spark
-            ident = spark.createDataFrame(
-                [(c, c) for c in set(consts)], "s string, o string"
-            )
+            ident = local_df(spark, [(c, c) for c in set(consts)], "s string, o string")
             if with_graph:
                 ident = store.df.select("g").distinct().crossJoin(ident)
             on = (["g"] if with_graph else []) + ["s", "o"]
@@ -3381,7 +3375,7 @@ def _anchored_path_pairs(store: TripleStore, node, with_graph: bool):
             base = base.select(*k, F.col("o").alias("s"), F.col("s").alias("o"))
         reached = seeded_closure(base, seed, keys=k)  # ([g,] o), >= 1 hops
     else:
-        frontier = store.spark.createDataFrame([(seed,)], "o string")
+        frontier = local_df(store.spark, [(seed,)], "o string")
         if with_graph:
             frontier = store.df.select("g").distinct().crossJoin(frontier)
         reached = geared_reach(store, node.path, frontier, with_graph, forward)
@@ -3532,7 +3526,7 @@ def describe(
       described resources.
     """
     if isinstance(subjects, list):
-        subjects = store.spark.createDataFrame([(s,) for s in subjects], "s string")
+        subjects = local_df(store.spark, [(s,) for s in subjects], "s string")
     frontier = subjects.select("s").distinct()
     inbound = None
     if mode in ("rev", "scbd"):

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from blazegraph_database_spark.model.terms import Lit, Var
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.sparql_parser import Parser
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.update.update import UpdatableStore
 
 
@@ -363,7 +364,7 @@ def _ground_triples_df(spark: SparkSession, quads: list[tuple], with_graph: bool
         ol, odt = lex_dt(o)
         rows.append((sl, pl, ol, odt, g) if with_graph else (sl, pl, ol, odt))
     schema = "s string, p string, o_lex string, o_dt string" + (", g string" if with_graph else "")
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def parse_update(src: str) -> list[dict]:

@@ -17,6 +17,7 @@ from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.model.terms import Lit, Var as V
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.compiler import ask, construct, describe, evaluate
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.sources.relational import cached_store, read_parquet
 
 QUERIES: dict[str, dict] = {}
@@ -65,7 +66,7 @@ def ask_negative_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASK (boolean query) lowered to a take(1) probe (ref: QueryType.ASK)."""
     st = cached_store(spark, sf_dir)
     b = ask(st, A.Filter(num("ab") < -900, A.SP(V("sup"), "supplier#s_acctbal", V("ab"))))
-    return spark.createDataFrame([(int(b),)], "answer int")
+    return local_df(spark, [(int(b),)], "answer int")
 
 
 @register(
@@ -186,7 +187,8 @@ def owl_inverse_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("customer:"), F.col("o_custkey")).alias("o_lex"),
         F.lit("iri").alias("o_dt"),
     )
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [("orderedBy", rdfs.OWL_INVERSE, "hasOrder", "iri")],
         "s string, p string, o_lex string, o_dt string",
     )
@@ -622,7 +624,7 @@ def turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('"^^<http://www.w3.org/2001/XMLSchema#integer> .'),
         ).alias("value")
     )
-    header = spark.createDataFrame([("@prefix n: <nation:> .",)], "value string")
+    header = local_df(spark, [("@prefix n: <nation:> .",)], "value string")
     path = tempfile.mkdtemp(prefix="ttl_rt_") + "/nation.ttl"
     header.unionByName(stmts).coalesce(1).write.mode("overwrite").text(path)
     parsed = read_turtle(spark, path)
@@ -1425,7 +1427,8 @@ def virtual_graph_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("string").alias("o_dt"),
         F.lit("g:ord").alias("g"),
     )
-    members = spark.createDataFrame(
+    members = local_df(
+        spark,
         [
             ("vg:lo", "http://www.bigdata.com/rdf#virtualGraph", "g:lo", "iri", None),
             ("vg:rest", "http://www.bigdata.com/rdf#virtualGraph", "g:hi", "iri", None),

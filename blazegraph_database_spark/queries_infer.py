@@ -11,6 +11,7 @@ from blazegraph_database_spark.inference import rdfs
 from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.model.terms import Lit, Var as V
 from blazegraph_database_spark.plans import algebra as A
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.update.update import UpdatableStore
 from blazegraph_database_spark.sources.relational import read_parquet
 
@@ -89,7 +90,8 @@ def rdfs_domain_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("customer:"), F.col("o_custkey")).alias("o_lex"),
         F.lit("iri").alias("o_dt"),
     )
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [
             ("orderedBy", rdfs.RDFS_SUBPROP, "relatedTo", "iri"),
             ("orderedBy", rdfs.RDFS_DOMAIN, "Class:Order", "iri"),
@@ -224,7 +226,8 @@ def owl_rules_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("iri").alias("o_dt"),
         ))
     )
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [
             ("hasRegion", rdfs.OWL_EQPROP, "inRegion", "iri"),
             ("Class:Nation", rdfs.OWL_EQCLASS, "Class:Country", "iri"),
@@ -306,7 +309,8 @@ def owl_hasvalue_ifp(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("iri").alias("o_dt"),
         ))
     )
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [
             ("Restr:Located", rdfs.RDF_TYPE, rdfs.OWL_RESTRICTION, "iri"),
             ("Restr:Located", rdfs.OWL_ONPROPERTY, "locatedIn", "iri"),
@@ -369,12 +373,13 @@ def tm_delete_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("Class:Buyer").alias("o_lex"),
         F.lit("iri").alias("o_dt"),
     )
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [("Class:Buyer", rdfs.RDFS_SUBCLASS, "Class:Party", "iri")],
         "s string, p string, o_lex string, o_dt string",
     )
     us = UpdatableStore.from_store(TripleStore(types.unionByName(schema)))
-    us.insert_with_closure(spark.createDataFrame([], "s string, p string, o_lex string, o_dt string"))
+    us.insert_with_closure(local_df(spark, [], "s string, p string, o_lex string, o_dt string"))
     to_delete = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
         F.concat(F.lit("customer:"), F.col("c_custkey")).alias("s"),
         F.lit(rdfs.RDF_TYPE).alias("p"),
@@ -426,7 +431,8 @@ def tm_counting_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     buyers = typed(F.lit(True), "Class:Buyer")  # every customer is a Buyer
     vips = typed(F.col("c_acctbal") > 5000, "Class:VIP")
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [
             ("Class:Buyer", rdfs.RDFS_SUBCLASS, "Class:Party", "iri"),
             ("Class:VIP", rdfs.RDFS_SUBCLASS, "Class:Party", "iri"),
@@ -477,7 +483,8 @@ def tm_insert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("iri").alias("o_dt"),
         )
 
-    schema = spark.createDataFrame(
+    schema = local_df(
+        spark,
         [
             ("Class:Buyer", rdfs.RDFS_SUBCLASS, "Class:Party", "iri"),
             ("Class:Machine", rdfs.RDFS_SUBCLASS, "Class:Party", "iri"),
@@ -488,7 +495,7 @@ def tm_insert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         TripleStore(seg_types("BUILDING", "Class:Buyer").unionByName(schema))
     )
     us.insert_with_closure(
-        spark.createDataFrame([], "s string, p string, o_lex string, o_dt string")
+        local_df(spark, [], "s string, p string, o_lex string, o_dt string")
     )
     us.insert_with_closure(seg_types("MACHINERY", "Class:Machine"))
     closed = us.current.df
@@ -565,7 +572,8 @@ def owl_property_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("region:"), F.col("n_regionkey")).alias("o_lex"),
         F.lit("iri").alias("o_dt"),
     )
-    axiom = spark.createDataFrame(
+    axiom = local_df(
+        spark,
         [
             ("in_region", rdfs.OWL_PROPCHAIN, "_:l1", "iri"),
             ("_:l1", rdfs.RDF_FIRST, "nat", "iri"),
@@ -647,9 +655,7 @@ def update_entailments(spark: SparkSession, sf_dir: str) -> DataFrame:
         us.current.df.filter(F.col("p") == rdfs.RDF_TYPE)
         .select("s", "o_lex").distinct().count()
     )
-    return spark.createDataFrame(
-        [("closed", closed_n), ("dropped", dropped_n)], "phase string, n long"
-    )
+    return local_df(spark, [("closed", closed_n), ("dropped", dropped_n)], "phase string, n long")
 
 
 @register(
@@ -703,7 +709,8 @@ def entailments_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         with us.transaction():
             us.drop_entailments()  # clears the inferred bookkeeping in-tx
             us.insert_data(
-                spark.createDataFrame(
+                local_df(
+                    spark,
                     [("nation:0", "tag#tx", "aborted", "string")],
                     "s string, p string, o_lex string, o_dt string",
                 )
@@ -716,6 +723,4 @@ def entailments_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         us.current.df.filter(F.col("p") == rdfs.RDF_TYPE)
         .select("s", "o_lex").distinct().count()
     )
-    return spark.createDataFrame(
-        [("closed", closed_n), ("dropped", dropped_n)], "phase string, n long"
-    )
+    return local_df(spark, [("closed", closed_n), ("dropped", dropped_n)], "phase string, n long")

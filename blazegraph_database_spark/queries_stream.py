@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.streaming import stream as S
 
 QUERIES: dict[str, dict] = {}
@@ -254,7 +255,7 @@ def stream_to_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = S.read_events_stream(spark, sf_dir)
     triples = S.events_to_triples(st)
-    empty = spark.createDataFrame([], "s string, p string, o_lex string, o_dt string")
+    empty = local_df(spark, [], "s string, p string, o_lex string, o_dt string")
     us = UpdatableStore.from_store(TripleStore(empty))
     S.ingest_stream_to_store(triples, us).awaitTermination()
     return us.current.df.groupBy("p").agg(F.count(F.lit(1)).alias("n"))

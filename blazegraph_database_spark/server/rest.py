@@ -34,6 +34,7 @@ from blazegraph_database_spark.model.store import TripleStore
 from blazegraph_database_spark.plans import compiler
 from blazegraph_database_spark.plans.sparql_parser import parse_sparql_query
 from blazegraph_database_spark.plans.update_parser import apply_update
+from blazegraph_database_spark.session import local_df
 from blazegraph_database_spark.sources import ntriples, rdf_formats, rdf_writers
 from blazegraph_database_spark.update.update import UpdatableStore
 
@@ -951,9 +952,7 @@ class SparqlEndpoint:
                 bnode("_:ds", sd + "namedGraph", gn)
                 iri(gn, sd + "name", gname)
                 iri(gn, self._RDF_TYPE, sd + "Graph")
-        df = self.spark.createDataFrame(
-            t, "s string, p string, o_lex string, o_dt string"
-        )
+        df = local_df(self.spark, t, "s string, p string, o_lex string, o_dt string")
         ser, ctype = _pick(accept, _GRAPH_FMTS, NT)
         return 200, ctype, ser(df, self.max_result_rows)
 

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
@@ -86,3 +87,35 @@ def get_spark(app: str = "blazegraph-spark", shuffle_partitions: int | None = No
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """Driver-built rows as a DataFrame: every such frame in the package is
+    made here (docs/scale_notes.md "Plan-build discipline").
+
+    ``rows`` is a list of tuples or a pandas frame, matched to ``schema``
+    (DDL string or StructType) by position. The rows travel as one Arrow
+    table, so the frame plans as ``LocalTableScan`` whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set, and zero rows give
+    a typed empty frame. ``createDataFrame`` over a python list instead
+    plans as ``Scan ExistingRDD`` over a PythonRDD, which every later action
+    over its lineage re-runs in python workers.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if not arrow:  # a zero-column Arrow batch reaches Spark with no rows
+        return spark.range(len(rows)).select()
+    if hasattr(rows, "iloc"):  # pandas: NaN in a float column reads as null
+        cols = [
+            pa.array(rows.iloc[:, i], type=f.type, from_pandas=True)
+            for i, f in enumerate(arrow)
+        ]
+    else:
+        rows = list(rows)
+        vals = list(zip(*rows)) if rows else [()] * len(arrow)
+        cols = [pa.array(v, type=f.type) for v, f in zip(vals, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)

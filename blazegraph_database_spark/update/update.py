@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from blazegraph_database_spark.model.store import TRIPLE_COLS, TripleStore
 from blazegraph_database_spark.plans.compiler import construct, evaluate, instantiate_template
+from blazegraph_database_spark.session import local_df
 
 QUAD_COLS = TRIPLE_COLS + ["g"]
 
@@ -168,7 +169,7 @@ class UpdatableStore:
             cols = "commit int, action string, s string, p string, o_lex string, o_dt string"
             if "g" in self.current.df.columns:
                 cols += ", g string"
-            return spark.createDataFrame([], cols)
+            return local_df(spark, [], cols)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)

@@ -85,6 +85,17 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture(params=["true", "false"], ids=["arrow_on", "arrow_off"])
+def arrow_conf(spark, request):
+    """Runs a test with pyspark's Arrow conversion on and off (foreign
+    sessions, like the correctness harness, may leave it off)."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield
+    spark.conf.set(key, before)
+
+
 @pytest.fixture(scope="session")
 def tiny_store(spark):
     """Hand-built RDF fixture for algebra edge cases."""

@@ -346,3 +346,22 @@ def test_exists_flag_extend_child_null(spark):
     got = {(r.s, r.f) for r in evaluate(st, plan).select("s", "f").collect()}
     # a: x=5 matches; b: x NULL → unbound-compatible → true
     assert got == {("a", True), ("b", True)}
+
+
+def test_column_cache_not_shared_by_contexts_with_one_id(monkeypatch):
+    """The compiler's Column cache belongs to one SparkContext object: a new
+    context must not see the old one's Columns even when CPython hands it
+    the dead context's id."""
+    from pyspark import SparkContext
+
+    from blazegraph_database_spark.plans import compiler
+
+    class FakeContext:
+        pass
+
+    old, new = FakeContext(), FakeContext()
+    monkeypatch.setattr(compiler, "id", lambda obj: 1, raising=False)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", old)
+    compiler._ccache()["s"] = "column of the old context"
+    monkeypatch.setattr(SparkContext, "_active_spark_context", new)
+    assert "s" not in compiler._ccache()

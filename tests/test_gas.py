@@ -190,3 +190,35 @@ def test_concurrent_iterative_queries_no_lock(spark, monkeypatch):
     assert seq[0] == seq[1] == conc[0] == conc[1] > 0
     # generous margin: fully serialized would be ~t_seq; overlap must show
     assert t_conc < t_seq * 0.9, (t_conc, t_seq)
+
+
+# ---- empty driver-tier results: zero rows must give typed empty frames ----
+
+
+def test_paths_unreachable_target_is_empty(spark):
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")], "src string, dst string")
+    out = gas.paths(edges, "a", "e")
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<path:string,hops:int>"
+
+
+def test_bfs_and_sssp_empty_sources(spark, diamond):
+    bfs = gas.bfs(diamond, [])
+    assert bfs.collect() == []
+    assert bfs.columns == ["node", "depth", "pred"]
+    weighted = diamond.withColumn("weight", diamond.src.isNotNull().cast("double"))
+    sssp = gas.sssp(weighted, [])
+    assert sssp.collect() == []
+    assert sssp.columns == ["node", "dist"]
+
+
+def test_bfs_from_df_empty_seeds(spark, diamond):
+    out = gas.bfs_from_df(diamond, spark.createDataFrame([], "node string"))
+    assert out.collect() == []
+    assert out.columns == ["node", "depth"]
+
+
+def test_pagerank_driver_empty_graph(spark):
+    out = gas._pagerank_driver(spark.createDataFrame([], "src string, dst string"), 0.85, 10)
+    assert out.collect() == []
+    assert out.columns == ["node", "rank"]

@@ -830,3 +830,12 @@ def test_contamination_bloom_plan_no_probe_broadcast(spark):
     assert "CartesianProduct" not in p
     # exact-verify join side keeps the shuffle hint (no broadcast of grams)
     assert "ShuffledHashJoin" in p or "SortMergeJoin" in p
+
+
+def test_lsh_candidate_pairs_no_self_pairs(spark):
+    """An id that repeats inside one (band, key) bucket must not pair with
+    itself: candidates are strictly a < b."""
+    sig = list(range(dedup.NUM_PERM))
+    sigs = spark.createDataFrame([(7, sig), (7, sig), (9, sig)], "id long, sig array<long>")
+    pairs = {(r.a, r.b) for r in dedup.lsh_candidate_pairs(sigs).collect()}
+    assert pairs == {(7, 9)}

@@ -10,7 +10,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from blazegraph_database_spark.model.terms import Var as V
+from blazegraph_database_spark.model.terms import Lit, Var as V
 from blazegraph_database_spark.plans import algebra as A
 from blazegraph_database_spark.plans.compiler import evaluate
 from blazegraph_database_spark.sources.relational import cached_store
@@ -699,3 +699,29 @@ def test_ntriples_parse_plan_stays_linear(spark, tmp_path):
     )
     # the calendar-validation regex likewise appears once
     assert plan.count("0[13578]") == 1
+
+
+def test_driver_rows_plan_as_local_table_scan(spark, tiny_store, monkeypatch, arrow_conf):
+    """Frames of driver-built rows (INSERT DATA triples, a VALUES block, a
+    property path's seed frontier) plan as LocalTableScan — no Scan
+    ExistingRDD over a PythonRDD that every later action re-runs in python
+    workers — whether or not the session enables Arrow."""
+    from blazegraph_database_spark.operators import paths
+    from blazegraph_database_spark.plans import compiler
+    from blazegraph_database_spark.plans.update_parser import _ground_triples_df
+
+    monkeypatch.setattr(compiler, "_GEAR_MIN_BASE_PAIRS", -1)
+    seen = {}
+
+    def spy(store, path, frontier, with_graph, forward):
+        seen["frontier"] = frontier
+        return frontier
+
+    monkeypatch.setattr(paths, "geared_reach", spy)
+    insert = _ground_triples_df(spark, [("s1", "p1", Lit("7", "long"), None)], False)
+    values = evaluate(tiny_store, A.Values([{"x": "a", "y": "b"}, {"x": "c"}]))
+    node = A.PathPattern("a", A.Seq(A.Link("knows"), A.Plus(A.Link("knows"))), V("o"))
+    compiler._anchored_path_pairs(tiny_store, node, False)
+    for df in (insert, values, seen["frontier"]):
+        plan = plan_of(df, "simple")
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
